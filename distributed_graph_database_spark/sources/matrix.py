@@ -11,12 +11,20 @@ Reference lineage (SURVEY.md §2.1 R1-R3):
   dynamic partition overwrite of that graph_id only.
 
 Spark-first shape: matrix files are ingested with `wholetext` (one row
-per file — a graph's matrix is one record by construction), then two
-`posexplode` steps unpack row lines and row cells entirely JVM-side.
-Per-file parallelism scales to millions of graph files; no driver-side
-parsing of matrix contents ever happens. The canonical store is
-parquet partitioned by graph_id, so "modify graph G" rewrites exactly
-one partition while readers elsewhere see an atomic swap.
+per file — a graph's matrix is one record by construction), then ONE
+generator unpacks each file into its edges JVM-side: a nested
+`transform` over (line, row index) and (cell, column index) keeps the
+upper-triangle 1-cells as (src, dst) structs, and a single `inline`
+emits them as columns. The write path is this parse plus a count and
+is bound by fixed per-query cost, not data: the parse is one
+projection analysed in one pass (not a posexplode per level plus
+filters), and an input smaller than Spark's per-file open cost is
+parsed in one task, so the count needs one job and no shuffle. Larger
+inputs keep per-file parallelism, which scales to millions of graph
+files; matrix contents are parsed on the executors, never in the
+driver. The canonical store is parquet partitioned by graph_id, so
+"modify graph G" rewrites exactly one partition while readers
+elsewhere see an atomic swap.
 """
 
 from __future__ import annotations
@@ -59,13 +67,36 @@ def write_fixture_matrix_files(out_dir: str = FIXTURE_MATRIX_DIR) -> str:
     return out_dir
 
 
+# One generator over each file's text (`value`): lines[0] is n, matrix
+# row i (0-based) is vertex i + 1; each line is trimmed, then split on
+# \s+. The file stores the symmetric matrix, so only the upper triangle
+# incl. the diagonal is kept: each undirected edge once, self-loops once.
+# A SQL string, not Column lambdas: it is analysed in one pass, and the
+# same expression built from Python lambdas took about twice as long to
+# plan; planning, not data, bounds the write path.
+_LINES_SQL = r"split(trim(value), '\n')"
+_EDGES_SQL = rf"""
+inline(flatten(transform(
+    slice({_LINES_SQL}, 2, size({_LINES_SQL}) - 1),
+    (line, i) -> filter(
+        transform(
+            split(trim(line), '\\s+'),
+            (c, j) -> IF(c = '1' AND i <= j,
+                         named_struct('src', CAST(i + 1 AS BIGINT),
+                                      'dst', CAST(j + 1 AS BIGINT)),
+                         NULL)),
+        e -> e IS NOT NULL))))
+"""
+
+
 def parse_matrix_dir(spark: SparkSession, path: str) -> DataFrame:
     """R1 ingest, distributed: directory of Gx.txt → edge list
     (graph_id, src, dst) stored once (src <= dst; self-loops once).
 
-    wholetext puts each file in one row; posexplode(split) unpacks the
-    matrix without any Python-side row handling. The n=0 file (G4)
-    yields no matrix rows and therefore no edges — correct degenerate.
+    wholetext puts each file in one row; one `inline` generator
+    (_EDGES_SQL) unpacks the matrix without any Python-side row
+    handling. The n=0 file (G4) yields no matrix rows and therefore no
+    edges — correct degenerate.
     """
     raw = (
         spark.read.format("text")
@@ -76,35 +107,18 @@ def parse_matrix_dir(spark: SparkSession, path: str) -> DataFrame:
         # into otherwise-clean runs (seen in BENCH_r02 stderr).
         .option("pathGlobFilter", "*.txt")
         .load(path)
-        .select(
-            F.regexp_extract(F.input_file_name(), r"([^/]+)\.txt$", 1).alias("graph_id"),
-            F.split(F.trim(F.col("value")), "\n").alias("lines"),
-        )
     )
-    cells = (
-        raw.select(
-            "graph_id",
-            # lines[0] is n; matrix rows follow. posexplode keeps the
-            # 0-based row index → 1-based vid = pos + 1.
-            F.posexplode(F.slice(F.col("lines"), 2, F.size("lines") - 1)).alias(
-                "row_idx", "row_line"
-            ),
-        )
-        .select(
-            "graph_id",
-            (F.col("row_idx") + 1).cast("bigint").alias("src"),
-            F.posexplode(F.split(F.trim(F.col("row_line")), r"\s+")).alias(
-                "col_idx", "cell"
-            ),
-        )
-        .filter(F.col("cell") == "1")
-        .select(
-            "graph_id", "src", (F.col("col_idx") + 1).cast("bigint").alias("dst")
-        )
+    # Spark charges opening one file as reading openCostInBytes. Input
+    # below that (the reference's whole store is ~36 KB) is parsed in
+    # one task: a count or aggregate over it then needs no shuffle.
+    # The size comes from the file listing the load already did.
+    size = raw._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    if size <= spark._jsparkSession.sessionState().conf().filesOpenCostInBytes():
+        raw = raw.coalesce(1)
+    return raw.selectExpr(
+        r"regexp_extract(input_file_name(), '([^/]+)\\.txt$', 1) AS graph_id",
+        _EDGES_SQL,
     )
-    # The file stores the symmetric matrix; keep each undirected edge
-    # once (upper triangle incl. diagonal = self-loops counted once).
-    return cells.filter(F.col("src") <= F.col("dst"))
 
 
 def parse_matrix_vertices(spark: SparkSession, path: str) -> DataFrame:
@@ -168,35 +182,22 @@ def graph_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(MODIFY_GRAPH_ID, s, d) for s, d in MODIFIED_EDGES],
         "graph_id string, src bigint, dst bigint",
     )
-    with _partition_overwrite(spark):
-        (
-            modified.repartition("graph_id")
-            .write.mode("overwrite")
-            .partitionBy("graph_id")
-            .parquet(STORE_DIR)
-        )
+    # Per-write dynamic overwrite: only partitions present in the
+    # written data are replaced (R3 semantics). An option, not the
+    # session conf, because concurrent serve threads share the session.
+    (
+        modified.repartition("graph_id")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("graph_id")
+        .parquet(STORE_DIR)
+    )
 
     return (
         spark.read.parquet(STORE_DIR)
         .groupBy("graph_id")
         .agg(F.count(F.lit(1)).alias("n_edges"))
     )
-
-
-class _partition_overwrite:
-    """Scoped spark.sql.sources.partitionOverwriteMode=dynamic: only
-    partitions present in the written data are replaced (R3 semantics);
-    restores the previous mode on exit."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
 
 
 _N_MODIFIED = len(MODIFIED_EDGES)

@@ -131,14 +131,79 @@ def test_bfs_validate_rejects_unknown_start(spark):
     assert got == BFS_GOLDEN[("G1", 1)]
 
 
-def test_bfs_order_plan_is_bounded(spark):
+def test_bfs_order_plan_is_bounded(spark, monkeypatch):
     """The formatter aggregates over orderBy+limit (per-partition
-    heaps), not an unbounded single-task collect (VERDICT r1 #2)."""
+    heaps), not an unbounded single-task collect (VERDICT r1 #2).
+    Pinned on the distributed arm (gate 0), where that hazard exists;
+    the local arm's bound is the gate, pinned by the next test."""
+    monkeypatch.setattr(traversal, "LOCAL_MAX_EDGES", 0)
     plan = (
         traversal.bfs_order(spark, graph_edges_sym(spark, "G1"), 1)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "TakeOrderedAndProject" in plan
+
+
+def test_bfs_order_local_arm_input_is_bounded_by_gate(spark, monkeypatch):
+    """The local arm formats in the driver, so the gate is its bound:
+    levels come back as a LocalRelation only when the edge set fits
+    LOCAL_MAX_EDGES rows, and then hold at most one row per edge row
+    plus the root. One row over the gate sends the read to the
+    distributed formatter pinned above."""
+    edges = graph_edges_sym(spark, "G5")
+    n_rows = edges.count()
+    monkeypatch.setattr(traversal, "LOCAL_MAX_EDGES", n_rows)
+    lv = traversal.bfs_levels(spark, edges, 1)
+    assert lv.isLocal() and lv.count() <= n_rows + 1
+    order = traversal.bfs_order_from_levels(lv)
+    assert "LocalTableScan" in order._jdf.queryExecution().executedPlan().toString()
+    assert order.first()[0] == BFS_ORDER_GOLDEN[("G5", 1)]
+
+    monkeypatch.setattr(traversal, "LOCAL_MAX_EDGES", n_rows - 1)
+    assert not traversal.bfs_levels(spark, edges, 1).isLocal()
+
+
+def test_small_graph_read_runs_constant_jobs(spark, tmp_path):
+    """A read over a stored 30-vertex graph (the reference's largest,
+    ingested from its matrix file) runs at most 8 Spark jobs, for op 4
+    (bfs_order) and for op 3 (bfs_levels then dfs_leaves_from_levels);
+    the superstep loop ran ~44."""
+    from distributed_graph_database_spark.sources import matrix
+
+    n = 30
+    # Heap-shaped tree: parent(v) = v // 2, so BFS from 1 visits 1..n
+    # in order and the leaves are the vertices without a child.
+    (tmp_path / "G1.txt").write_text(
+        matrix.matrix_text(n, [(v // 2, v) for v in range(2, n + 1)])
+    )
+    sc = spark.sparkContext
+
+    def jobs_and_result(group, read):
+        sc.setJobGroup(group, group)
+        try:
+            sym = symmetrize(matrix.parse_matrix_dir(spark, str(tmp_path)))
+            result = read(sym)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+    jobs, order = jobs_and_result(
+        "read-op4", lambda sym: traversal.bfs_order(spark, sym, 1).first()[0]
+    )
+    assert order == " ".join(map(str, range(1, n + 1)))
+    assert jobs <= 8, jobs
+
+    jobs, leaves = jobs_and_result(
+        "read-op3",
+        lambda sym: {
+            r.vid
+            for r in traversal.dfs_leaves_from_levels(
+                traversal.bfs_levels(spark, sym, 1), sym
+            ).collect()
+        },
+    )
+    assert leaves == set(range(n // 2 + 1, n + 1))
+    assert jobs <= 8, jobs
 
 
 def test_orderkey_unique_guards_no_distinct_derivation(spark, sf_oracle):

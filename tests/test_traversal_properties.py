@@ -11,8 +11,11 @@ from __future__ import annotations
 
 from collections import deque
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+
+from distributed_graph_database_spark.graph import traversal
 
 
 def _edge_lists(draw):
@@ -70,12 +73,20 @@ def _spark_edges(spark, edges):
     return symmetrize(spark.createDataFrame(edges, "src bigint, dst bigint"))
 
 
+# Both arms of traversal's size gate: the default (these graphs run in
+# the driver) and 0, which sends every non-empty edge set to the
+# distributed loop.
+both_arms = pytest.mark.parametrize(
+    "gate", [traversal.LOCAL_MAX_EDGES, 0], ids=["local", "distributed"]
+)
+
+
+@both_arms
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(case=graph_case)
-def test_bfs_levels_match_model(spark, case):
-    from distributed_graph_database_spark.graph import traversal
-
+def test_bfs_levels_match_model(spark, monkeypatch, gate, case):
+    monkeypatch.setattr(traversal, "LOCAL_MAX_EDGES", gate)
     n, edges, start = case
     got = {
         r.vid: r.level
@@ -86,12 +97,12 @@ def test_bfs_levels_match_model(spark, case):
     assert got == _model_bfs(edges, start)
 
 
+@both_arms
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(case=graph_case)
-def test_dfs_leaves_match_model(spark, case):
-    from distributed_graph_database_spark.graph import traversal
-
+def test_dfs_leaves_match_model(spark, monkeypatch, gate, case):
+    monkeypatch.setattr(traversal, "LOCAL_MAX_EDGES", gate)
     n, edges, start = case
     got = {
         r.vid
